@@ -9,38 +9,16 @@ object Bench {
     ManagementFactory.getGarbageCollectorMXBeans.asScala
       .map(_.getCollectionTime.max(0L)).sum / 1e3
 
-  /** Aggregated task metrics for ONE measured sample, captured via a
-    * SparkListener. Purpose: when a sample runs far over its committed
-    * median in the driver environment (r13: two 75-100x spikes), the
-    * artifact should carry enough signal to ATTRIBUTE the spike — GC
-    * pause (task_gc/jvm_gc high), CPU starvation (wall >> task_run, or
-    * task_run >> task_cpu), or spill (spill_mb > 0) — instead of
-    * freezing a mysterious number. Listener delivery is async and
-    * there is no public flush, so these are best-effort diagnostics,
-    * not measurements; the wall number stays the measurement.
+  /** Task metrics of ONE measured sample (a [[QueryTrace]] window).
+    * Purpose: when a sample runs far over its committed median (r13:
+    * two 75-100x spikes), the artifact should carry enough signal to
+    * ATTRIBUTE the spike — GC pause (task_gc/jvm_gc high), CPU
+    * starvation (wall >> task_run, or task_run >> task_cpu), or spill
+    * (spill_mb > 0) — instead of freezing a mysterious number. The
+    * wall number stays the measurement.
     */
-  private final class TaskTraceListener
-      extends org.apache.spark.scheduler.SparkListener {
-    private var runMs = 0L; private var cpuNs = 0L; private var gcMs = 0L
-    private var spillBytes = 0L; private var peakMs = 0L; private var nTasks = 0L
-    def reset(): Unit = synchronized {
-      runMs = 0; cpuNs = 0; gcMs = 0; spillBytes = 0; peakMs = 0; nTasks = 0
-    }
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) synchronized {
-        runMs += m.executorRunTime; cpuNs += m.executorCpuTime
-        gcMs += m.jvmGCTime
-        spillBytes += m.memoryBytesSpilled + m.diskBytesSpilled
-        peakMs = math.max(peakMs, m.executorRunTime)
-        nTasks += 1
-      }
-    }
-    def snapshotJson(wall: Double, jvmGc: Double): String = synchronized {
-      f"""{"wall_sec":$wall%.2f,"jvm_gc_sec":$jvmGc%.2f,"task_run_sec":${runMs / 1e3}%.2f,"task_cpu_sec":${cpuNs / 1e9}%.2f,"task_gc_sec":${gcMs / 1e3}%.2f,"spill_mb":${spillBytes / 1048576.0}%.1f,"peak_task_sec":${peakMs / 1e3}%.2f,"n_tasks":$nTasks%d}"""
-    }
-  }
+  private def sampleTrace(t: QueryTrace.Window, wall: Double, jvmGc: Double): String =
+    f"""{"wall_sec":$wall%.2f,"jvm_gc_sec":$jvmGc%.2f,"task_run_sec":${t.runMs / 1e3}%.2f,"task_cpu_sec":${t.cpuNs / 1e9}%.2f,"task_gc_sec":${t.gcMs / 1e3}%.2f,"spill_mb":${t.spillBytes / 1048576.0}%.1f,"peak_task_sec":${t.peakTaskMs / 1e3}%.2f,"n_tasks":${t.tasks}%d}"""
 
   /** Per-query medians from a committed BENCH_local.json — the
     * adjudication baseline. Missing/unparsable file, or a baseline
@@ -134,8 +112,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local()
-    val tracer = new TaskTraceListener
-    spark.sparkContext.addSparkListener(tracer)
+    val trace = QueryTrace.attach(spark.sparkContext)
     // Adjudication baseline: the curated committed medians (the
     // default OUT path is a different file — promoting a run to
     // baseline is an explicit copy).
@@ -213,7 +190,7 @@ object Bench {
     def sampleOnce(name: String,
         fn: (org.apache.spark.sql.SparkSession, String) =>
           org.apache.spark.sql.DataFrame): Sample = {
-      tracer.reset()
+      trace.take() // drain the previous sample's events off the clock
       val g0 = gcSeconds
       val t0 = System.nanoTime()
       val err =
@@ -230,7 +207,7 @@ object Bench {
       wallSpent += committed.get(name)
         .fold(dt)(c => math.min(dt, math.max(c * 5, 0.5)))
       err.foreach(m => errors.getOrElseUpdate(name, m))
-      Sample(dt, gcd, err, tracer.snapshotJson(dt, gcd))
+      Sample(dt, gcd, err, sampleTrace(trace.take(), dt, gcd))
     }
     // >5x committed AND past an absolute floor that SCALES with the
     // committed value (clamped to [0.1, 0.5] s) so sub-second noise

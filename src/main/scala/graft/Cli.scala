@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.core.SeriesSpec
@@ -15,6 +16,17 @@ import graft.sources.Ingest
   */
 object Cli {
   def main(args: Array[String]): Unit = {
+    val builder = Sessions.required(SparkSession.builder().appName("graft-pipeline"))
+    // spark-submit hands --master over as the spark.master property; a
+    // builder .master() would take precedence over it, so the local
+    // default applies only when no master was given
+    val spark = (if (new SparkConf().contains("spark.master")) builder
+      else builder.master("local[*]")).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    try run(spark, args) finally spark.stop()
+  }
+
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val opts = args.sliding(2, 2).collect {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
     }.toMap
@@ -31,13 +43,6 @@ object Cli {
       }.toMap
     }.getOrElse(vars.map(_ -> VariableConfig()).toMap)
 
-    val spark = SparkSession.builder()
-      .appName("graft-pipeline")
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]")) // spark-submit overrides
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
     val wide = Ingest.readCsvTimeSeries(spark, csv,
       tsCol = opts.getOrElse("ts-col", "timestamp"))
       .withColumn("station", lit(station))
@@ -52,6 +57,5 @@ object Cli {
     if (opts.get("figures").contains("true"))
       graft.report.Figures.writeAll(result, spec, "variable", out)
     println(s"[graft] wrote $out")
-    spark.stop()
   }
 }

@@ -7,6 +7,15 @@ import graft.core.SeriesSpec
 import graft.pipeline.{Pipeline, PipelineConfig, VariableConfig}
 import graft.sources.Ingest
 
+/** The reference repository's committed outputs (its
+  * scripts/water_qc_output tree): the golden corpus GoldenBench and
+  * the golden-parity specs read. It is not part of this repository;
+  * where it is absent those specs fail with PATH_NOT_FOUND on this path.
+  */
+object GoldenCorpus {
+  val Dir = "/root/reference/scripts/water_qc_output"
+}
+
 /** Same-data throughput comparison against the reference: run the full
   * EP1 pipeline (sentinel mask, gap classify, 3 event detectors,
   * seasonal stats, 9-check QC suite, accepted projection, meta) over
@@ -23,9 +32,8 @@ object GoldenBench {
   def main(args: Array[String]): Unit = {
     val spark = Sessions.local()
 
-    val goldDir = "/root/reference/scripts/water_qc_output"
     val wide = spark.read.parquet(
-      s"$goldDir/processed/Erkenruh_Einruhr/Erkenruh_Einruhr__qc_timeseries.parquet")
+      s"${GoldenCorpus.Dir}/processed/Erkenruh_Einruhr/Erkenruh_Einruhr__qc_timeseries.parquet")
     val ranges = Seq( // MAIN range_map (ufz_water_qc_pipeline.py:788-794)
       ("SurfaceWaterConcentration_O2_mg_L-1", 0.0, 40.0),
       ("SurfaceWaterpH_pH", 0.0, 13.0),
@@ -58,8 +66,8 @@ object GoldenBench {
 
     def once(): (Long, Long, Long, Long) = {
       val r = Pipeline.run(longN, spec, cfg, variableCol = Some("variable"))
-      val res = (r.timeseries.count(), r.events.count(),
-        r.seasonal.count(), r.meta.count())
+      val res = (Force.force(r.timeseries), Force.force(r.events),
+        Force.force(r.seasonal), Force.force(r.meta))
       graft.core.Caches.unpersistAll()
       res
     }

@@ -3,13 +3,13 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ext.{Multimodal, Similarity, TextStats}
-import graft.operators.Diagnostics
+import graft.ext.{Multimodal, Sessionize, Similarity, TextStats}
+import graft.operators.{AsOf, Diagnostics}
 
-/** Scale-evidence microbench for the round-7 operators, each
-  * replicated along its own parallelism axis (the EventsScaleBench /
-  * GoldenBench methodology: per-unit work identical across N, only
-  * unit count widens; median of 3 after one warmup):
+/** Scale-evidence microbench, each operator replicated along its own
+  * parallelism axis (GoldenBench's station-axis methodology: per-unit
+  * work identical across N, only unit count widens; median of 3 after
+  * one warmup):
   *
   * - robust_fit: lineitem replicated across N synthetic group
   *   populations (group axis = the aggregation key). The 1+2·iters
@@ -21,16 +21,14 @@ import graft.operators.Diagnostics
   *   scan+retrieval stage widens — rerank cost must stay flat.
   * - pack_bucketed: documents replicated N× across fresh shards
   *   (shard axis = the single exchange's partition key).
+  * - sessionize / funnel / asof / compact / scd2 / hop: events
+  *   replicated across N synthetic user populations (user axis).
   */
 object OpsScaleBench {
   def main(args: Array[String]): Unit = {
     val spark = Sessions.local()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    // stage-level shuffle-write accumulator for the shuffle-volume
-    // rows: the listener sums bytesWritten per completed stage; reads
-    // go through ListenerFlush.flush (drain the async bus) so the
-    // counter is exact per measured run, never racing delivery.
     // Honest forcing for every timed row: execute the operator's own
     // physical plan (all columns computed) instead of count(), which
     // Catalyst optimizes around — see graft.Force for the round-12
@@ -41,20 +39,14 @@ object OpsScaleBench {
       def forcedRows(): Long = Force.force(df)
     }
 
-    val shuffleWritten = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          shuffleWritten.addAndGet(
-            e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      })
+    // shuffle-write bytes of one measured run: QueryTrace.take drains
+    // the async listener bus, so the count is exact, never racing
+    // delivery
+    val trace = QueryTrace.attach(spark.sparkContext)
     def measuredShuffleMb(run: () => Long): Double = {
-      org.apache.spark.graftbridge.ListenerFlush.flush(spark.sparkContext)
-      val before = shuffleWritten.get()
+      trace.take()
       run()
-      org.apache.spark.graftbridge.ListenerFlush.flush(spark.sparkContext)
-      (shuffleWritten.get() - before) / 1e6
+      trace.take().shuffleWriteBytes / 1e6
     }
 
     // dev-only row filter (comma-separated op names): re-measure one
@@ -129,8 +121,10 @@ object OpsScaleBench {
     val emb0 = graft.sources.Tables.embeddings(spark, dir)
     val docs0 = graft.sources.Tables.documents(spark, dir)
       .select("doc_id", "text")
+    val ev0 = graft.sources.Tables.events(spark, dir)
     val nVecs = emb0.count()
     val nDocs = docs0.count()
+    val nEvents = ev0.count()
 
     // trained ONCE on the original seed slice for the quality_apply
     // row — apply must be measured with training off the clock
@@ -167,6 +161,46 @@ object OpsScaleBench {
         Diagnostics.groupedRobustFit(li,
           Seq("l_returnflag", "l_linestatus"),
           "l_quantity", "l_extendedprice").forcedRows())
+
+      // behavioral/temporal family (sessionize / funnel / as-of /
+      // compaction / scd2) on the user axis — the partition key all
+      // five key on: per-user work is identical across N, only key
+      // cardinality and row volume widen, the direct test of the "one
+      // shuffle on the user key, embarrassingly parallel per key"
+      // claim. Hop windows key on TIME, not user, so replication
+      // widens rows per (window, type) cell rather than cell count —
+      // the map-side combine must absorb the extra volume for wall
+      // time to stay flat.
+      val ev = replicate(ev0, "user_id", 1000000L, n)
+      val gap = 6L * 3600000000L
+      bench("sessionize", n, nEvents * n)(() =>
+        Sessionize.sessionize(ev, "user_id", "ts", gap).forcedRows())
+      bench("funnel", n, nEvents * n)(() =>
+        Sessionize.funnel(ev, "user_id", "ts", "event_type",
+          Seq("view", "click", "purchase")).forcedRows())
+      bench("asof", n, nEvents * n) { () =>
+        val purchases = ev.filter(col("event_type") === "purchase")
+          .select(col("user_id"), unix_micros(col("ts")).as("purchase_us"))
+        val views = ev.filter(col("event_type") === "view")
+          .select(col("user_id"), unix_micros(col("ts")).as("view_us"),
+            col("value"))
+          .groupBy("user_id", "view_us").agg(max("value").as("view_value"))
+        AsOf.asofJoin(purchases, views, "user_id", "purchase_us", "view_us",
+          Seq("view_value")).forcedRows()
+      }
+      bench("compact", n, nEvents * n)(() =>
+        Sessionize.compactLatest(
+          ev.select(col("user_id"), col("event_type"),
+            unix_micros(col("ts")).as("ts_us"), col("event_id")),
+          Seq("user_id", "event_type"), "ts_us", "event_id").forcedRows())
+      bench("scd2", n, nEvents * n)(() =>
+        Sessionize.scdIntervals(
+          ev.select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+            col("event_id"), col("value")),
+          Seq("user_id"), "ts_us", "event_id").forcedRows())
+      bench("hop", n, nEvents * n)(() =>
+        Sessionize.hoppingCounts(ev, "ts", "2 hours", "1 hour",
+          Seq("event_type")).forcedRows())
 
       val corpus = replicate(emb0, "vec_id", 10000000L, n)
       bench("rerank", n, nVecs * n)(() =>

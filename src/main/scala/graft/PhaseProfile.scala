@@ -1,88 +1,70 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import graft.core.Caches
 
-/** Dev-only loupe for overhead-bound queries: attributes a query's
-  * wall between DataFrame BUILD (driver rounds / bounded collects run
-  * eagerly while the plan is assembled), PLAN (analysis + optimization
-  * + physical planning of the final frame) and EXEC (run the plan via
-  * Force, incl. codegen compilation), and counts scheduler jobs /
-  * stages / tasks per phase — the sf0.1 sweep is fixed-overhead-bound
-  * (r14 diagnosis), so the lever is the NUMBER of actions, exchanges
-  * and plan fragments, and this prints exactly that.
+/** Dev-only per-query loupe: attributes a query's wall between
+  * DataFrame BUILD (driver rounds / bounded collects run eagerly while
+  * the plan is assembled), PLAN (analysis + optimization + physical
+  * planning of the final frame) and EXEC (run the plan via
+  * [[Force.force]], incl. codegen compilation), with the
+  * [[QueryTrace]] of each phase: scheduler jobs / stages / tasks, task
+  * CPU and GC, shuffle bytes and spill — the sf0.1 sweep is
+  * fixed-overhead-bound (r14 diagnosis), so the lever is the NUMBER
+  * of actions, exchanges and plan fragments, and this prints exactly
+  * that.
+  *
+  * Per query: one cold run (JIT/codegen-cache churn dominates it;
+  * timed and printed), then `reps` warm runs, each followed by its
+  * per-stage lines, then the median warm total. Formatted plans come
+  * from [[PlanDump]].
   *
   * Usage: tools/run_main.sh graft.PhaseProfile q_a q_b ...
-  * (SPARK_GRAFT_SF_DIR / SPARK_GRAFT_BENCH_REPS as in BenchSubset)
+  * (SPARK_GRAFT_SF_DIR / SPARK_GRAFT_BENCH_REPS as in Bench)
   */
 object PhaseProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
     val spark = Sessions.local()
-    @volatile var jobs = 0
-    @volatile var stages = 0
-    @volatile var tasks = 0
-    // job wall intervals: driver time BETWEEN jobs (AQE replan,
-    // broadcast collect glue, codegen of the next fragment) vs time
-    // IN jobs (task scheduling + execution)
-    val spans = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-    val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs += 1; starts.put(j.jobId, j.time)
-      }
-      override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        val s = starts.remove(j.jobId)
-        if (s != 0L) spans.add((s, j.time))
-      }
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        stages += 1; tasks += s.stageInfo.numTasks
-        if (sys.env.contains("SPARK_GRAFT_PHASE_STAGES")) {
-          val i = s.stageInfo
-          val m = i.taskMetrics
-          val wall = (i.completionTime.getOrElse(0L) -
-            i.submissionTime.getOrElse(0L)) / 1e3
-          println(f"[stage] ${i.stageId}%4d ${i.numTasks}%4d tasks  wall $wall%6.2f s  run ${m.executorRunTime / 1e3}%6.2f  cpu ${m.executorCpuTime / 1e9}%6.2f  deser ${m.executorDeserializeTime / 1e3}%5.2f  ${i.name.take(60)}")
-        }
-      }
-    })
-    def snap(): (Int, Int, Int) = (jobs, stages, tasks)
+    val trace = QueryTrace.attach(spark.sparkContext)
+    def secs(a: Long, b: Long): Double = (b - a) / 1e9
+    def counts(w: QueryTrace.Window): String =
+      f"${w.jobs}%3d jobs ${w.stages.size}%3d stages ${w.tasks}%4d tasks"
     args.foreach { n =>
-      // one warmup rep (JIT/codegen-cache churn dominates a cold rep)
-      try { Force.force(SparkEntry.queries(n)(spark, sfDir)) }
-      catch { case t: Throwable => println(s"[phase] $n warmup FAILED: $t") }
-      finally graft.core.Caches.unpersistAll(blocking = true)
-      (1 to reps).foreach { r =>
-        org.apache.spark.graftbridge.ListenerFlush.flush(spark.sparkContext)
-        val (j0, s0, t0c) = snap()
-        val t0 = System.nanoTime()
-        val df = SparkEntry.queries(n)(spark, sfDir)
-        val t1 = System.nanoTime()
-        org.apache.spark.graftbridge.ListenerFlush.flush(spark.sparkContext)
-        val (j1, s1, t1c) = snap()
-        val plan = df.queryExecution.executedPlan // force planning
-        val nExch = plan.toString.linesIterator.count(l =>
-          l.contains("Exchange") && !l.contains("ReusedExchange"))
-        val t2 = System.nanoTime()
-        spans.clear()
-        Force.force(df)
-        val t3 = System.nanoTime()
-        // merge job spans to attribute exec wall: union(job intervals)
-        // = scheduled work; the rest of exec wall is driver-only glue
-        val iv = {
-          import scala.jdk.CollectionConverters._
-          spans.asScala.toSeq.sortBy(_._1)
-        }
-        var inJobs = 0L
-        var end = Long.MinValue
-        iv.foreach { case (a, b) =>
-          if (a > end) { inJobs += b - a; end = b }
-          else if (b > end) { inJobs += b - end; end = b }
-        }
-        org.apache.spark.graftbridge.ListenerFlush.flush(spark.sparkContext)
-        val (j2, s2, t2c) = snap()
-        graft.core.Caches.unpersistAll(blocking = true)
-        println(f"[phase] $n%-24s rep $r  build ${(t1 - t0) / 1e9}%6.2f s (${j1 - j0}%3d jobs ${s1 - s0}%3d stages ${t1c - t0c}%4d tasks)  plan ${(t2 - t1) / 1e9}%5.2f s  exec ${(t3 - t2) / 1e9}%6.2f s (${j2 - j1}%3d jobs ${s2 - s1}%3d stages ${t2c - t1c}%4d tasks, in-jobs ${inJobs / 1e3}%5.2f s, glue ${((t3 - t2) / 1e6 - inJobs) / 1e3}%5.2f s)  exch $nExch%2d")
+      trace.take()
+      val c0 = System.nanoTime()
+      val cold =
+        try { Force.force(SparkEntry.queries(n)(spark, sfDir)); true }
+        catch { case t: Throwable => println(s"[phase] $n cold FAILED: $t"); false }
+        finally Caches.unpersistAll(blocking = true)
+      if (cold) {
+        println(f"[phase] $n%-24s cold ${secs(c0, System.nanoTime())}%6.2f s")
+        val totals = (1 to reps).map { r =>
+          trace.take()
+          val t0 = System.nanoTime()
+          val df = SparkEntry.queries(n)(spark, sfDir)
+          val t1 = System.nanoTime()
+          val build = trace.take()
+          val t1p = System.nanoTime()
+          val plan = df.queryExecution.executedPlan // force planning
+          val nExch = plan.toString.linesIterator.count(l =>
+            l.contains("Exchange") && !l.contains("ReusedExchange"))
+          val t2 = System.nanoTime()
+          Force.force(df)
+          val t3 = System.nanoTime()
+          val exec = trace.take()
+          Caches.unpersistAll(blocking = true)
+          val inJobs = exec.inJobsMs / 1e3
+          println(f"[phase] $n%-24s rep $r  build ${secs(t0, t1)}%6.2f s (${counts(build)})  plan ${secs(t1p, t2)}%5.2f s  exec ${secs(t2, t3)}%6.2f s (${counts(exec)}, in-jobs $inJobs%5.2f s, glue ${secs(t2, t3) - inJobs}%5.2f s)  exch $nExch%2d  cpu ${exec.cpuNs / 1e9}%6.2f s  gc ${exec.gcMs / 1e3}%5.2f s  shuffle r/w ${exec.shuffleReadBytes / 1e6}%8.2f/${exec.shuffleWriteBytes / 1e6}%8.2f MB  spill ${exec.spillBytes / 1e6}%7.2f MB")
+          (build.stages ++ exec.stages).foreach { s =>
+            println(f"[stage] ${s.id}%4d ${s.numTasks}%4d tasks  wall ${s.wallS}%6.2f s  run ${s.runS}%6.2f  cpu ${s.cpuS}%6.2f  deser ${s.deserS}%5.2f  ${s.name.take(60)}")
+          }
+          secs(t0, t1) + secs(t1p, t3)
+        }.sorted
+        val mid = totals.size / 2
+        val median =
+          if (totals.size % 2 == 1) totals(mid) else (totals(mid - 1) + totals(mid)) / 2
+        println(f"[phase] $n%-24s median $median%6.2f s over $reps warm reps")
       }
     }
     spark.stop()

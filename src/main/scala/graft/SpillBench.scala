@@ -45,8 +45,8 @@ object SpillBench {
     def run(label: String, blockRows: Int, spillAtRows: Int): Double = {
       val samples = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
-        Wrtds.proxy(d, spec, minp = 30,
-          blockRows = blockRows, spillAtRows = spillAtRows).count()
+        Force.force(Wrtds.proxy(d, spec, minp = 30,
+          blockRows = blockRows, spillAtRows = spillAtRows))
         (System.nanoTime() - t0) / 1e9
       }.sorted
       val med = samples(samples.size / 2)
@@ -56,7 +56,7 @@ object SpillBench {
       med
     }
     // warm-up (codegen + JIT) on the spill-off shape
-    Wrtds.proxy(d, spec, minp = 30).count()
+    Force.force(Wrtds.proxy(d, spec, minp = 30))
     // default-shape control, then a SAME-blockRows pair so the on/off
     // ratio isolates the disk round-trip (block size is a separate
     // axis: small blocks are cache-friendlier for the i×j kernel)

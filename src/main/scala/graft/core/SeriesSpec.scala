@@ -34,7 +34,7 @@ final case class SeriesSpec(
   *    as SQL NULL, so `count(value)` is that count);
   *  - rolling median interpolates the middle pair (numpy/pandas
   *    semantics); Spark's `median`/`percentile` reject window frames,
-  *    so it is computed as sorted-array middle over `collect_list`.
+  *    so it is computed by the native `graft_sliding_median` aggregate.
   */
 object SeriesWindows {
 
@@ -80,28 +80,15 @@ object SeriesWindows {
     * (graft.functions.SlidingMedian, registered by GraftExtensions)
     * collects the frame's non-null values into a primitive double
     * buffer, sorts, and averages the middle pair — same semantics as
-    * the collect_list chain below, minus the per-row boxing/generic
-    * sort that made it the dominant cost of the sentem/zscore stages.
-    * The min_periods guard is fused into the aggregate (NULL below
-    * max(minp, 1) finite values in the frame).
+    * the built-in collect_list chain (the test-scope twin
+    * `MedianTwin.rollingMedianSql`, pinned bit-for-bit by RollingSpec),
+    * minus the per-row boxing/generic sort that made it the dominant
+    * cost of the sentem/zscore stages. The min_periods guard is fused
+    * into the aggregate (NULL below max(minp, 1) finite values in the
+    * frame).
     */
   def rollingMedian(value: Column, w: WindowSpec, minp: Int): Column =
-    if (sys.env.get("SPARK_GRAFT_MEDIAN_SQL").contains("1"))
-      rollingMedianSql(value, w, minp) // A/B escape hatch for benchmarks
-    else call_function("graft_sliding_median", value, lit(minp)).over(w)
-
-  /** The pure-built-in form of [[rollingMedian]] (sort the collected
-    * frame, average elements (n+1)/2 and n/2+1, 1-based; equal when n
-    * odd). Kept as the semantic reference: RollingSpec asserts the
-    * native aggregate matches this expression bit-for-bit.
-    */
-  def rollingMedianSql(value: Column, w: WindowSpec, minp: Int): Column = {
-    val arr = array_sort(collect_list(value).over(w))
-    val n = size(arr)
-    when(n >= minp && n >= 1,
-      (element_at(arr, ((n + lit(1)) / lit(2)).cast("int")) +
-        element_at(arr, (n / lit(2)).cast("int") + lit(1))) / lit(2.0))
-  }
+    call_function("graft_sliding_median", value, lit(minp)).over(w)
 
   /** Count of non-null values in the frame (support / min_periods input). */
   def rollingCount(value: Column, w: WindowSpec): Column =

@@ -125,7 +125,7 @@ object Dedup {
     * + groupBy(id_a,id_b) count) shuffles |pairs|·|shingles/doc| rows
     * through a join AND an aggregate; the array form moves each doc's
     * shingles ONCE into the per-doc row and the pair join carries
-    * |pairs| rows only — measured at sf0.1 (BenchSubset, median of 3):
+    * |pairs| rows only — measured at sf0.1 (warm median of 3):
     * capped 6.0→4.0 s, minhash 6.5→3.3 s, and the prefix join (which
     * also feeds its ranking arrays straight in) 15.8→1.8 s — and
     * asymptotically |shingles/doc|× less verify shuffle volume.
@@ -164,19 +164,12 @@ object Dedup {
     // NOTE (documented in COVERAGE.md): building a dedup query
     // therefore fires these two small planning jobs at construction
     // time, AQE-style. Scores are identical on both paths.
-    // SPARK_GRAFT_VERIFY_RESTRICT=on|off pins the decision for A/B
-    // measurement (and skips the two planning jobs); default "auto"
-    // is the adaptive heuristic above.
-    val shC = sys.env.get("SPARK_GRAFT_VERIFY_RESTRICT") match {
-      case Some("on") => graft.core.Caches.cached(sh.join(candIds, Seq(id)))
-      case Some("off") => sh
-      case _ =>
-        val nCand = candIds.count()
-        val nShDocs = sh.agg(approx_count_distinct(col(id)).as("n"))
-          .head().getLong(0)
-        if (nCand * 2 >= nShDocs) sh
-        else graft.core.Caches.cached(sh.join(candIds, Seq(id)))
-    }
+    val nCand = candIds.count()
+    val nShDocs = sh.agg(approx_count_distinct(col(id)).as("n"))
+      .head().getLong(0)
+    val shC =
+      if (nCand * 2 >= nShDocs) sh
+      else graft.core.Caches.cached(sh.join(candIds, Seq(id)))
     // one row per doc: full shingle set as an array + its size. The
     // shingle sets are distinct by construction (shinglesHashed ends
     // in .distinct()), so size(array_intersect) IS the set
@@ -1133,8 +1126,6 @@ object Dedup {
       labels = next
       cur.unpersist(false)
       it += 1
-      if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-        println(s"[cc] round $it converged=$converged t=${System.nanoTime()}")
     }
     require(converged, s"dupClusters did not converge in $maxIter rounds")
     } catch { case t: Throwable =>
@@ -1222,8 +1213,6 @@ object Dedup {
       converged = next.filter(col("__chg")).count() == 0
       labels = next.drop("__chg")
       it += 1
-      if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-        println(s"[cc] round $it converged=$converged t=${System.nanoTime()}")
     }
     require(converged, s"dupClusters did not converge in $maxIter rounds")
     // fold isolated nodes back in: no edge → own cluster, keeper

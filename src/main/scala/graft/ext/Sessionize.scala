@@ -87,7 +87,7 @@ object Sessionize {
     * aggregate still combines map-side: each task emits one candidate
     * row per key, so the exchange moves O(keys) rows, not the log.
     * Measured 4.2× faster than the row_number()-window formulation at
-    * 3.2M rows / 24k keys (EventsScaleBench compact n=32: 1.0 s vs
+    * 3.2M rows / 24k keys (scale-bench compact row, n=32: 1.0 s vs
     * 4.16 s) — the window shape must shuffle-and-sort every surviving
     * row where this reduces before the wire; the gap widens with
     * rows-per-key.

@@ -415,27 +415,6 @@ object TextStats {
       .drop("__cum")
   }
 
-  /** Gopher-style repetition signals — the word-level repetition
-    * filters a pre-training curation pass runs per document: duplicate
-    * word fraction (1 − distinct/total), top-unigram fraction, and
-    * top-bigram fraction. Two interchangeable formulations (identical
-    * results, pinned equal in ExtSpec): [[repetitionStatsFold]] — per-doc
-    * sorted-array folds, zero shuffle, interpreted lambdas — and
-    * [[repetitionStatsRelational]] — explode + codegen'd hash
-    * aggregates, two shuffles. Default is the fold (shuffle-free: each
-    * document is scored inside its scan task, the shape that stays
-    * embarrassingly parallel at 100 TB); the A/B numbers live in
-    * COVERAGE.md. SPARK_GRAFT_REPETITION_IMPL=relational switches.
-    * Docs with zero words are dropped (no meaningful ratios).
-    * Output: id, n_words, n_distinct_words, dup_word_frac,
-    * top_word_frac, top_bigram_frac.
-    */
-  def repetitionStats(df: DataFrame, id: String, text: String): DataFrame =
-    sys.env.get("SPARK_GRAFT_REPETITION_IMPL") match {
-      case Some("relational") => repetitionStatsRelational(df, id, text)
-      case _ => repetitionStatsFold(df, id, text)
-    }
-
   /** Lowercased whitespace tokens with empties dropped — the shared
     * tokenizer of the repetition/bigram family (one definition, three
     * call sites, so the tokenization contract can't drift).
@@ -472,18 +451,27 @@ object TextStats {
     * caller projections keep the alias because it is referenced three
     * times, which stops CollapseProject from inlining it back).
     */
-  private def bigramsOf(ws: Column): Column =
+  private[ext] def bigramsOf(ws: Column): Column =
     transform(
       slice(ws, lit(1), greatest(size(ws) - 1, lit(0))),
       (w, i) => concat_ws(" ", w, element_at(ws, i + 2)))
 
-  /** Shuffle-free formulation: per-doc sorted-array folds. NOTE: the
-    * `aggregate` lambdas evaluate INTERPRETED (higher-order-function
-    * lambdas sit outside whole-stage codegen — measured in COVERAGE.md
-    * §2.9), so this trades interpreted per-row CPU for zero shuffle.
+  /** Gopher-style repetition signals — the word-level repetition
+    * filters a pre-training curation pass runs per document: duplicate
+    * word fraction (1 − distinct/total), top-unigram fraction, and
+    * top-bigram fraction, as per-doc sorted-array folds: zero shuffle,
+    * each document scored inside its scan task (the shape that stays
+    * embarrassingly parallel at 100 TB). NOTE: the `aggregate` lambdas
+    * evaluate INTERPRETED (higher-order-function lambdas sit outside
+    * whole-stage codegen — measured in COVERAGE.md §2.9); the
+    * explode + hash-aggregate formulation measured ~11× slower at
+    * sf0.1 (COVERAGE.md) and lives on in test scope as the twin
+    * ExtSpec pins this fold against.
+    * Docs with zero words are dropped (no meaningful ratios).
+    * Output: id, n_words, n_distinct_words, dup_word_frac,
+    * top_word_frac, top_bigram_frac.
     */
-  private[graft] def repetitionStatsFold(df: DataFrame, id: String,
-      text: String): DataFrame = {
+  def repetitionStats(df: DataFrame, id: String, text: String): DataFrame = {
     // longest run of equal adjacent elements in the sorted array ==
     // max term frequency; one fold (interpreted — see method doc),
     // long arithmetic only
@@ -509,50 +497,6 @@ object TextStats {
           .as("top_word_frac"),
         round(when(col("n_words") >= 2,
             maxRun(col("__bi")) * lit(1.0) / (col("n_words") - 1))
-          .otherwise(lit(0.0)), 6).as("top_bigram_frac"))
-  }
-
-  /** Relational formulation of [[repetitionStats]]: explode unigrams
-    * and bigrams (tagged) into one long table, count term frequencies
-    * with a codegen'd two-level hash aggregate, and fold back to one
-    * row per doc. Two shuffles on (id, kind, term) / (id), but every
-    * operator stays inside whole-stage codegen with map-side partial
-    * aggregation. Semantics identical to the fold (max term frequency
-    * == longest equal-run of the sorted token array).
-    */
-  private[graft] def repetitionStatsRelational(df: DataFrame, id: String,
-      text: String): DataFrame = {
-    // per-ROW key, not per-id: the fold scores each input row
-    // independently, so a duplicated doc id must yield one output row
-    // per input row, not a merged term-frequency table. The rowid
-    // never leaves this method.
-    val terms = df
-      .select(col(id), tokens(col(text)).as("__ws"))
-      .select(col(id), col("__ws"), bigramsOf(col("__ws")).as("__bi"))
-      .withColumn("__rid", monotonically_increasing_id())
-      .filter(size(col("__ws")) > 0)
-      .select(col(id), col("__rid"), explode(concat(
-        transform(col("__ws"), w => struct(lit(0).as("kind"), w.as("term"))),
-        transform(col("__bi"), b => struct(lit(1).as("kind"), b.as("term")))))
-        .as("t"))
-      .select(col(id), col("__rid"), col("t.kind").as("kind"),
-        col("t.term").as("term"))
-    val tf = terms.groupBy(col(id), col("__rid"), col("kind"), col("term"))
-      .agg(count(lit(1)).as("c"))
-    val uni = col("kind") === 0
-    tf.groupBy(col(id), col("__rid"))
-      .agg(
-        sum(when(uni, col("c"))).as("n_words"),
-        count(when(uni, lit(1))).as("n_distinct_words"),
-        max(when(uni, col("c"))).as("__max_w"),
-        max(when(!uni, col("c"))).as("__max_b"))
-      .select(col(id), col("n_words"), col("n_distinct_words"),
-        round(lit(1.0) - col("n_distinct_words") * lit(1.0) / col("n_words"), 6)
-          .as("dup_word_frac"),
-        round(col("__max_w") * lit(1.0) / col("n_words"), 6)
-          .as("top_word_frac"),
-        round(when(col("n_words") >= 2,
-            coalesce(col("__max_b"), lit(0L)) * lit(1.0) / (col("n_words") - 1))
           .otherwise(lit(0.0)), 6).as("top_bigram_frac"))
   }
 

@@ -7,9 +7,9 @@ import org.apache.spark.SparkContext
   * listener-accumulated shuffle-bytes counter right after an action
   * races the delivery thread. `waitUntilEmpty` drains the bus
   * deterministically — the alternative (sleep-and-poll) is the flaky
-  * pattern this bridge exists to avoid. Used only by
-  * [[graft.OpsScaleBench]]'s shuffle-volume rows; no query-path code
-  * depends on it.
+  * pattern this bridge exists to avoid. Used by [[graft.QueryTrace]]
+  * (and so every dev harness built on it) and by the perfbench
+  * harness's counters; no query-path code depends on it.
   */
 object ListenerFlush {
   def flush(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ext.{Dedup, Multimodal, Sampling, Similarity, TextStats}
+import graft.ext.{Dedup, Multimodal, RepetitionTwin, Sampling, Similarity, TextStats}
 
 class ExtSpec extends SparkTestBase {
 
@@ -1093,9 +1093,9 @@ class ExtSpec extends SparkTestBase {
 
   test("repetitionStats fold and relational formulations agree on real docs") {
     val docs = sources.Tables.documents(spark, "/root/testdata/sf0.001")
-    val a = TextStats.repetitionStatsFold(docs, "doc_id", "text")
+    val a = TextStats.repetitionStats(docs, "doc_id", "text")
       .orderBy("doc_id").collect()
-    val b = TextStats.repetitionStatsRelational(docs, "doc_id", "text")
+    val b = RepetitionTwin.repetitionStatsRelational(docs, "doc_id", "text")
       .orderBy("doc_id").collect()
     assert(a.length == b.length && a.length > 0)
     a.zip(b).foreach { case (x, y) => assert(x == y, s"mismatch: $x vs $y") }
@@ -1109,8 +1109,8 @@ class ExtSpec extends SparkTestBase {
     val d = Seq((7L, "a a b"), (7L, "c c c d"), (8L, "x y")).toDF("doc_id", "text")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("doc_id", "n_words").collect().toSeq
-    val a = rows(TextStats.repetitionStatsFold(d, "doc_id", "text"))
-    val b = rows(TextStats.repetitionStatsRelational(d, "doc_id", "text"))
+    val a = rows(TextStats.repetitionStats(d, "doc_id", "text"))
+    val b = rows(RepetitionTwin.repetitionStatsRelational(d, "doc_id", "text"))
     assert(a.length == 3, s"fold must keep both id-7 rows: $a")
     assert(a == b, s"formulations diverge on duplicate ids: $a vs $b")
   }

@@ -74,7 +74,7 @@ class RollingSpec extends SparkTestBase {
       val w = SeriesWindows.centered(spec, k)
       val cmp = df.select(
         SeriesWindows.rollingMedian(col("value"), w, minp).as("m_native"),
-        SeriesWindows.rollingMedianSql(col("value"), w, minp).as("m_sql"))
+        MedianTwin.rollingMedianSql(col("value"), w, minp).as("m_sql"))
         .collect()
       cmp.foreach { r =>
         assert(r.isNullAt(0) == r.isNullAt(1), s"null mismatch at k=$k: $r")

@@ -70,7 +70,7 @@ class SlidingMedianExecSpec extends SparkTestBase {
         s"window half missing:\n$mixedPlan")
       assert(mixedPlan.collect { case s: ShuffleExchangeExec => s }.size == 1)
       val slowMixed = df.select(col("series"), col("ts"), col("value"),
-        SeriesWindows.rollingMedianSql(col("value"), w, 3).as("m"),
+        MedianTwin.rollingMedianSql(col("value"), w, 3).as("m"),
         avg(col("value")).over(w).as("a"))
       assert(collectMedians(mixed, "m").toSeq == collectMedians(slowMixed, "m").toSeq)
       assert(mixed.count() == 150)
@@ -95,7 +95,7 @@ class SlidingMedianExecSpec extends SparkTestBase {
       val fast = collectMedians(
         df.withColumn("m", SeriesWindows.rollingMedian(col("value"), w, minp)), "m")
       val slow = collectMedians(
-        df.withColumn("m", SeriesWindows.rollingMedianSql(col("value"), w, minp)), "m")
+        df.withColumn("m", MedianTwin.rollingMedianSql(col("value"), w, minp)), "m")
       assert(fast.length == slow.length)
       fast.zip(slow).foreach { case (f, s) =>
         assert(f == s, s"k=$k minp=$minp mismatch at ${f._1}/${f._2}: $f vs $s")
@@ -117,7 +117,7 @@ class SlidingMedianExecSpec extends SparkTestBase {
     val fast = collectMedians(
       df.withColumn("m", SeriesWindows.rollingMedian(col("value"), w, 1)), "m")
     val slow = collectMedians(
-      df.withColumn("m", SeriesWindows.rollingMedianSql(col("value"), w, 1)), "m")
+      df.withColumn("m", MedianTwin.rollingMedianSql(col("value"), w, 1)), "m")
     assert(fast.toSeq == slow.toSeq)
     // b's rows are all-null -> NULL medians; c is a 1-row series
     assert(fast.count(_._3.isEmpty) == 2)
@@ -140,9 +140,9 @@ class SlidingMedianExecSpec extends SparkTestBase {
         s"chained medians must share one series exchange:\n$plan")
       // and the values still match the declarative chain end to end
       val slow = df
-        .withColumn("med", SeriesWindows.rollingMedianSql(col("value"), w, 4))
+        .withColumn("med", MedianTwin.rollingMedianSql(col("value"), w, 4))
         .withColumn("mad",
-          SeriesWindows.rollingMedianSql(abs(col("value") - col("med")), w, 4))
+          MedianTwin.rollingMedianSql(abs(col("value") - col("med")), w, 4))
       assert(collectMedians(out, "mad").toSeq == collectMedians(slow, "mad").toSeq)
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }

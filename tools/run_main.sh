@@ -1,7 +1,11 @@
 #!/bin/bash
 # Run a graft main class with the same JVM flags sbt's forked run uses
 # (Spark 4 on JDK 17 add-opens + UTC + no UI), without taking the sbt
-# target lock. Usage: tools/run_main.sh graft.Bench [args...]
+# target lock. Needs compiled classes (sbt compile) first.
+# Usage: tools/run_main.sh <main> [args...], where <main> is one of
+#   graft.Bench, graft.Verify, graft.Cli, graft.PhaseProfile,
+#   graft.PlanDump, graft.OpsScaleBench, graft.SpillBench,
+#   graft.GoldenBench, graft.PlanSweep, graft.EntrySmoke
 set -euo pipefail
 cd "$(dirname "$0")/.."
 ADD_OPENS=""
